@@ -43,7 +43,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from durablefunctions_mapreduce_dotnet_spark.queries import all_queries
-from durablefunctions_mapreduce_dotnet_spark.session import get_spark
+from durablefunctions_mapreduce_dotnet_spark.session import get_spark, release_pins
 
 #: Merge epoch for official-run min-of-runs (see module docstring).
 #: Bump at round open and after any plan-affecting change; the bench
@@ -342,18 +342,12 @@ def pulled_reason(name: str) -> str:
 
 def run_one(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-    # Release blocks persisted during query CONSTRUCTION (pagerank /
-    # gap-fill / distribution-rank pin loop-invariant frames; their
-    # pinned=[] release contract belongs to long-lived callers — which
-    # this 48-query × 4-run session is).  Without this, ~hundreds of
-    # orphaned MEMORY_AND_DISK frames accumulate over the run and the
-    # later queries pay block-manager/GC pressure (dedup_clusters read
-    # ~0.4-0.8 s slower in-bench than standalone before the purge).
-    # Unpersisting AFTER the action is always safe: each rep's own
+    # Operators pin loop state and adjacencies for the caller to release;
+    # this long-lived session would otherwise pile up every run's dead
+    # pins, and later queries would measure eviction churn.  Releasing
+    # after every run (not only between queries) is safe: each run's
     # construction re-pins what it needs.
-    spark = df.sparkSession
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_pins(df.sparkSession)
 
 
 #: scaling-shape probe: flagship + the slowest LLM/graph queries, timed
@@ -604,21 +598,6 @@ def main() -> None:
     # stable).  A quiet host reads spreads mostly < 0.3; a loaded host
     # blows them past 1.0 while the min column stays comparable.
     spreads: dict[str, float] = {}
-    # Storage-pool hygiene BETWEEN queries (r15 measurement-bug fix,
-    # declared in OPTIMIZATION_r15.md): queries persist frames for the
-    # duration of their own action (rounds, adjacencies, sign tables)
-    # and the bench never released them, so by the ~100th HEADLINE
-    # entry the pool held every prior query's dead pins and late
-    # queries measured eviction churn, not their plan (bfs read ~5.8 s
-    # in-bench vs ~4.2 standalone).  The release is UNTIMED and sits
-    # between queries only — the three samples of one query still share
-    # whatever they always shared, so per-query methodology is
-    # unchanged from r14; cross-query interference is what goes.
-    def _release_pins() -> None:
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
-    _release_pins()  # warmups pinned nothing we want to keep either
     for name in names:
         samples = []
         for _ in range(3):
@@ -628,7 +607,6 @@ def main() -> None:
         best = min(samples)
         times[name] = round(best, 4)
         spreads[name] = round((max(samples) - best) / best, 3)
-        _release_pins()
     # Min-of-runs merge (official sf0.1 @ 32-core runs only — see
     # module docstring): fold this run's per-query best-of-3 into the
     # prior BENCH_DETAIL.json minima when the merge epoch matches.  The
@@ -717,7 +695,6 @@ def main() -> None:
         if big_dir:
             curve: dict[str, dict[str, float]] = {}
             for name in SCALE_PROBE:
-                _release_pins()  # same between-queries hygiene as sf0.1
                 run_one(qs[name](spark, big_dir))  # warm (fresh file footers)
                 best = float("inf")
                 for _ in range(3):

@@ -168,7 +168,6 @@ def global_interval_concurrency(
     df: DataFrame,
     start_us: Column,
     end_us: Column,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The GLOBAL-timeline form of :func:`interval_concurrency` — the
     running open-interval count over one un-keyed timeline, WITHOUT the
@@ -188,8 +187,8 @@ def global_interval_concurrency(
 
     Returns the full (t_us, concurrency) step timeline; peak is a tiny
     aggregate downstream.  The netted-deltas frame is pinned evictable
-    for the quantile/count/window passes — same ``pinned=[]`` release
-    contract as ``global_distribution_rank``.
+    for the quantile/count/window passes; ``session.release_pins``
+    frees it once the result is consumed.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -198,8 +197,6 @@ def global_interval_concurrency(
     ends = df.select(end_us.alias("_t"), F.lit(-1).alias("_d"))
     net = starts.unionAll(ends).groupBy("_t").agg(F.sum("_d").alias("_net"))
     net = net.persist(StorageLevel.MEMORY_AND_DISK)
-    if pinned is not None:
-        pinned.append(net)
     p = spark.sparkContext.defaultParallelism
     probs = [i / p for i in range(1, p)]
     bounds = sorted(set(net.stat.approxQuantile("_t", probs, 0.001)))

@@ -521,7 +521,8 @@ def minhash_near_dup_pairs(
     ``fast=False`` keeps the two-stage expression+UDF formulation —
     identical FINAL pairs (pytest-pinned), different hash family.
 
-    Negative result pinned (r15, plans/r15/ab_dedup_cuts.py): dropping
+    Negative result pinned (r15, ``git show
+    de8968f:plans/r15/ab_dedup_cuts.py``): dropping
     the candidate-pairs eager cut (identity ``checkpoint`` for the
     pairs, sign table still cut) to save one serialized driver job was
     re-measured for the construction-dominated single-consumer queries

@@ -405,7 +405,6 @@ def pagerank(
     iters: int = 3,
     damping: float = 0.85,
     checkpoint: CheckpointFn | None = None,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Edge-multiplicity-weighted PageRank with dangling-mass
     redistribution, fixed ``iters`` power iterations — the crawl/domain
@@ -432,12 +431,9 @@ def pagerank(
     (same contract as :func:`connected_components`).  N (node count)
     is a driver scalar by design — the one collect is one long.
 
-    The edge/node/degree frames AND each round's persisted ranks are
-    pinned evictable (MEMORY_AND_DISK) for the duration of the
-    iterations; callers running pagerank repeatedly in a long-lived
-    session should pass ``pinned=[]`` and ``unpersist()`` the appended
-    frames when done — the same release contract as
-    ``global_distribution_rank`` / ``gap_fill``.
+    The edge/node/degree frames AND each round's ranks are persisted
+    evictable (MEMORY_AND_DISK); long-lived sessions free them with
+    ``session.release_pins`` once the result is consumed.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -482,8 +478,6 @@ def pagerank(
     dang_nodes = nodes.join(
         ew.select("_s").distinct(), nodes.node == F.col("_s"), "left_anti"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    if pinned is not None:
-        pinned.extend((ew, nodes, dang_nodes))
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     teleport = (1.0 - damping) / n
     for i in range(iters):
@@ -533,14 +527,13 @@ def pagerank(
             # convergence-scale iteration counts without paying a
             # Catalyst toRdd conversion per round.  Quiet interleaved
             # A/B at sf0.1 (r15, 4 reps, outputs asserted identical,
-            # plans/r15/ab_pagerank_rounds.py): shipped lazy-cut-per-
-            # round 3.39 s min / persist-per-round-no-cut 2.28 s /
+            # `git show de8968f:plans/r15/ab_pagerank_rounds.py`):
+            # shipped lazy-cut-per-round 3.39 s min /
+            # persist-per-round-no-cut 2.28 s /
             # persist+cut-per-round 3.66 s — persist wins every rep;
             # the per-round cut was the cost, not the fix.  Values are
             # bit-identical (cuts/pins change execution, not math).
             ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            if pinned is not None:
-                pinned.append(ranks)
             if checkpoint is not None and (i + 1) % 6 == 0:
                 ranks = getattr(checkpoint, "lazy", checkpoint)(ranks)
     return ranks.select("node", F.round("rank", 9).alias("rank")).orderBy("node")
@@ -551,7 +544,6 @@ def triangle_counts(
     src: str = "id_a",
     dst: str = "id_b",
     checkpoint: CheckpointFn = local_checkpoint,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(node, n_triangles) — how many triangles each node closes in the
     undirected graph of ``edges`` (self-loops and duplicate/reverse
@@ -568,10 +560,8 @@ def triangle_counts(
     shuffles total (degrees, wedge join, closing join), all
     equi-joins; no driver state.
 
-    Pin lifetime: the canonical edge list is persisted evictable for
-    the duration of the computation; long-lived sessions pass
-    ``pinned=[]`` and unpersist when done (the pagerank/landmark_bfs
-    release contract).
+    The canonical edge list is persisted evictable; long-lived sessions
+    free it with ``session.release_pins`` once the result is consumed.
     """
     # canonical edges feed THREE consumers (degrees + both sides of the
     # orientation join) and `oriented` feeds three more (e1, e2, the
@@ -584,11 +574,11 @@ def triangle_counts(
     # disappears (two serialized eager jobs become one); the wedge
     # stages then read the cut `oriented` and never touch und again, so
     # no racing stage can duplicate the distinct.  Quiet interleaved
-    # A/B at sf0.1 (plans/r15/ab_graph_cuts.py, outputs asserted
-    # identical): eager+eager 1.15 s min / persist+persist 1.05 /
-    # persist+eager 0.69 — every rep.  `oriented` KEEPS the eager cut:
-    # its three wedge-join legs race within one stage group, the
-    # MinHash-sign-table finding.
+    # A/B at sf0.1 (`git show de8968f:plans/r15/ab_graph_cuts.py`,
+    # outputs asserted identical): eager+eager 1.15 s min /
+    # persist+persist 1.05 / persist+eager 0.69 — every rep.  `oriented`
+    # KEEPS the eager cut: its three wedge-join legs race within one
+    # stage group, the MinHash-sign-table finding.
     from pyspark.storagelevel import StorageLevel
 
     und = (
@@ -600,8 +590,6 @@ def triangle_counts(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if pinned is not None:
-        pinned.append(und)
     deg = (
         und.select(F.col("u").alias("n"))
         .union(und.select(F.col("v").alias("n")))
@@ -651,7 +639,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     checkpoint: CheckpointFn = local_checkpoint,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan et
     al. 2007, the GraphFrames/Pregel formulation): every node starts as
@@ -690,12 +677,13 @@ def label_propagation(
     eyes open: the two union legs of ``both`` race within the first
     stage group and may duplicate the cached distinct's compute
     per-partition, where the eager cut serialized it; quiet
-    interleaved A/B at sf0.1 (plans/r15/ab_graph_cuts.py, outputs
-    asserted identical, min-of-4): eager 2.07 s / persist 1.94 s,
+    interleaved A/B at sf0.1 (``git show
+    de8968f:plans/r15/ab_graph_cuts.py``, outputs asserted identical,
+    min-of-4): eager 2.07 s / persist 1.94 s,
     persist ≤ eager in EVERY rep — the saved materialization job
     outweighs the race, and on a cluster removing a serialized job
     barrier is the term that grows.  Long-lived sessions release the
-    pin via ``pinned=[]`` (pagerank contract).
+    pin with ``session.release_pins``.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -709,8 +697,6 @@ def label_propagation(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if pinned is not None:
-        pinned.append(und)
     both = und.select(F.col("u").alias("s"), F.col("v").alias("d")).union(
         und.select(F.col("v").alias("s"), F.col("u").alias("d"))
     )
@@ -844,7 +830,8 @@ def kcore(
     probe materializes the checkpoint, one pass per round, and the
     plan each round compiles is O(1).
 
-    Second negative pinned (r15, plans/r15/ab_kcore_probe.py): probing
+    Second negative pinned (r15, ``git show
+    de8968f:plans/r15/ab_kcore_probe.py``): probing
     every 2nd round (counts strictly decrease until fixpoint, so
     equality across a 2-round window still proves the unique core;
     plan growth between probes 3^2, bounded) halves the serialized
@@ -905,7 +892,6 @@ def landmark_bfs(
     lm_col: str = "lm",
     max_depth: int = 4,
     checkpoint: CheckpointFn = local_checkpoint,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Multi-source BFS: exact hop distance from every landmark to every
     node within ``max_depth`` — the landmark/distance-sketch primitive
@@ -921,7 +907,8 @@ def landmark_bfs(
     frontier disjoint, which also bounds state by nodes x landmarks
     regardless of path multiplicity.
 
-    Negative result pinned (r15, plans/r15/ab_bfs_rounds.py): fusing
+    Negative result pinned (r15, ``git show
+    de8968f:plans/r15/ab_bfs_rounds.py``): fusing
     the per-round distinct + anti-join into ONE combiner-reduced
     aggregation (expanded ∪ visited → groupBy(node, lm).min(flag),
     keep flag=1 — provably the same frontier) measured a wash at
@@ -948,14 +935,12 @@ def landmark_bfs(
     satisfies every round's join distribution, so the adjacency is
     shuffled once, not once per round; evictable, nothing hard-pinned.
 
-    Pin lifetime (r15, VERDICT r14 #3): every persisted frame — the
-    adjacency and each uncut round — stays pinned until the CALLER's
-    action completes (the returned ``visited`` union consumes all of
-    them, so none can be released mid-loop without a mid-loop action).
-    Callers in long-lived sessions pass ``pinned=[]`` and ``unpersist``
-    the appended frames once done with the result — the same release
-    contract as :func:`pagerank` / ``global_distribution_rank``; at
-    100 TB the executor storage pool must not fill with dead rounds.
+    Pin lifetime: every persisted frame — the adjacency and each uncut
+    round — stays pinned until the CALLER's action completes (the
+    returned ``visited`` union consumes all of them, so none can be
+    released mid-loop without a mid-loop action).  Long-lived sessions
+    free them with ``session.release_pins`` once done with the result;
+    at 100 TB the executor storage pool must not fill with dead rounds.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -967,8 +952,6 @@ def landmark_bfs(
         .repartition("u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if pinned is not None:
-        pinned.append(und)
     visited = landmarks.select(
         F.col(lm_col).alias("node"), F.col(lm_col).alias("lm"), F.lit(0).alias("dist")
     )
@@ -985,8 +968,6 @@ def landmark_bfs(
             nxt = cut_lazy(nxt)
         else:
             nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-            if pinned is not None:
-                pinned.append(nxt)
         visited = visited.unionByName(nxt)
         frontier = nxt
     return visited
@@ -1000,7 +981,6 @@ def sssp_bounded(
     dst: str = "dst",
     w: str = "w",
     checkpoint: CheckpointFn = local_checkpoint,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Bounded-round single-source shortest path (Bellman-Ford): the
     exact minimum cost over paths of at most ``rounds`` edges, on the
@@ -1026,11 +1006,8 @@ def sssp_bounded(
     checkable unit (full SSSP is this to fixpoint).  Weights and costs
     are integers end-to-end — no FP accumulation anywhere.
 
-    Pin lifetime (r15, VERDICT r14 #3): same release contract as
-    :func:`landmark_bfs` — every persisted frame (adjacency + each
-    uncut round, all consumed by the returned relaxation fixpoint) is
-    appended to ``pinned`` when the caller passes a list, to be
-    unpersisted once the caller's action completes."""
+    Pin lifetime: as :func:`landmark_bfs` — the adjacency and each
+    uncut round stay persisted until ``session.release_pins``."""
     from pyspark.storagelevel import StorageLevel
 
     cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
@@ -1044,8 +1021,6 @@ def sssp_bounded(
         .repartition("u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if pinned is not None:
-        pinned.append(und)
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "node bigint, cost bigint")
     for rnd in range(1, rounds + 1):
@@ -1062,6 +1037,4 @@ def sssp_bounded(
             dist = cut_lazy(dist)
         else:
             dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
-            if pinned is not None:
-                pinned.append(dist)
     return dist

@@ -42,7 +42,6 @@ def gap_fill(
     value_col: str,
     step_seconds: int,
     id_col: str = "event_id",
-    pinned: list[DataFrame] | None = None,
     max_grid_buckets: int = 10_000_000,
     chunk_buckets: int = 65_536,
 ) -> DataFrame:
@@ -63,9 +62,8 @@ def gap_fill(
     The bucket aggregate is pinned MEMORY_AND_DISK for its two consumers
     (grid bounds + densifying join); the pin cannot be released here
     (the returned plan still reads it), so long-lived sessions calling
-    this in a loop should pass ``pinned=[]`` and ``unpersist()`` the
-    appended frame after consuming the result — the same contract as
-    ``windows.global_distribution_rank``.
+    this in a loop free it with ``session.release_pins`` after consuming
+    the result.
     """
     ts = F.col(ts_col)
     if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
@@ -88,8 +86,6 @@ def gap_fill(
     from pyspark.storagelevel import StorageLevel
 
     obs = obs.persist(StorageLevel.MEMORY_AND_DISK)
-    if pinned is not None:
-        pinned.append(obs)
     # grid size is data-dependent (span / step per series): one corrupt
     # epoch-0 timestamp in a current-dated corpus would demand a
     # billion-element sequence and OOM the executor — fail loudly with

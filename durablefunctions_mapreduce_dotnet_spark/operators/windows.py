@@ -16,7 +16,6 @@ def global_distribution_rank(
     df: DataFrame,
     order_cols: list[str],
     ntile_k: int = 4,
-    pinned: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Global row_number / ntile / percent_rank / cume_dist WITHOUT a
     single-partition window — the distributed form of ``OVER (ORDER BY
@@ -54,16 +53,14 @@ def global_distribution_rank(
     evictable, so nothing is hard-pinned in executor memory.  The pin
     cannot be released inside this function (the RETURNED plan's rank
     pass still reads it), so long-lived sessions calling this in a loop
-    should pass ``pinned=[]`` and ``unpersist()`` the appended frame
-    after consuming the result — otherwise one cached copy per call
-    accumulates until the LRU store evicts it.
+    free it with ``session.release_pins`` after consuming the result —
+    otherwise one cached copy per call accumulates until the LRU store
+    evicts it.
     """
     spark = df.sparkSession
     p = spark.sparkContext.defaultParallelism
     lead = order_cols[0]
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if pinned is not None:
-        pinned.append(df)
     probs = [i / p for i in range(1, p)]
     bounds = sorted(set(df.stat.approxQuantile(lead, probs, 0.001)))
     pid = F.lit(0)

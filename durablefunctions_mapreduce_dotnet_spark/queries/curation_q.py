@@ -1004,7 +1004,8 @@ def q_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     three extra petabyte-scale writes; at sf0.1 they were most of the
     query's 2.65→7.42 s drift.
 
-    Negative result pinned (r15, plans/r15/ab_pipeline_cuts.py):
+    Negative result pinned (r15, ``git show
+    de8968f:plans/r15/ab_pipeline_cuts.py``):
     turning the two TINY id-set cuts (winners/losers) into persists —
     the pagerank/triangles r15 persist finding — LOST 2.84 → 3.23 s
     (quiet interleaved min-of-4, outputs identical): these cuts feed

@@ -132,7 +132,7 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection is deliberately NOT released here: the driver/bench
     harness evaluates the returned frame after this function exits, and
     the cached copy is LRU-evictable; loop callers needing deterministic
-    release pass ``pinned=[]`` per the operator docstring."""
+    release call ``session.release_pins`` after consuming the result."""
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     ranked = global_distribution_rank(o, ["o_totalprice", "o_orderkey"], ntile_k=4)
     return ranked.select("o_orderkey", "quartile", "pct_rank", "cume")

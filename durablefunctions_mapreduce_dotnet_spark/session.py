@@ -63,3 +63,17 @@ def get_spark(app_name: str = "durablefunctions-mapreduce-spark", cpus: int | No
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def release_pins(spark: SparkSession) -> None:
+    """Free every frame operators left cached: drop the cache manager's
+    entries first, so a later identical ``persist()`` stores blocks again
+    (a raw-RDD unpersist alone leaves the entry, and that persist stores
+    nothing), then unpersist any RDD still left, such as local checkpoints.
+
+    Consume every returned frame first: a persisted frame recomputes after
+    release, but one riding a local checkpoint (``run_to_memory``, BPE
+    merge rounds, connected-component cuts) cannot, and reading it raises."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()

@@ -140,7 +140,6 @@ def grid_layout_audit(
     id_col: str,
     bits: int = 6,
     n_files: int = 8,
-    pinned: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Per-file clustering-quality audit: the measurable argument for
     Z-ordering, as a deterministic DataFrame (one row per (layout,
@@ -197,12 +196,11 @@ def grid_layout_audit(
     now one GROUPING SETS aggregate ((pid_0), (pid_1), …): collected
     rows drop to O(parallelism × len(cols)) for bit-identical output.
 
-    The two frames this audit pins evictable (the projected base and
-    the bucket-coded rows) follow the ``pinned=[]`` release contract of
-    ``pagerank`` / ``global_distribution_rank``: callers in long-lived
-    sessions pass ``pinned=[]`` and unpersist when done with the
-    returned frame; the base projection is released internally as soon
-    as its last consumer (the Z-cell count) has run."""
+    The audit pins two frames evictable: the projected base, released
+    internally as soon as its last consumer (the Z-cell count) has run,
+    and the bucket-coded rows, which the returned frame still reads —
+    long-lived sessions free those with ``session.release_pins`` once
+    done with the result."""
     from pyspark.storagelevel import StorageLevel
 
     spark = df.sparkSession
@@ -278,11 +276,9 @@ def grid_layout_audit(
     zcells = coded.groupBy(*bnames).count().collect()
     # Job 3 materialized `coded`, so the projected base has no further
     # consumer — release its pin now (VERDICT r14 #3); `coded` itself
-    # feeds both tilings of the returned lazy frame, so its pin is the
-    # caller's to release via the pinned=[] contract.
+    # feeds both tilings of the returned lazy frame, so it stays pinned
+    # until the caller's ``session.release_pins``.
     base.unpersist()
-    if pinned is not None:
-        pinned.append(coded)
 
     def _z_of(vals: list[int]) -> int:
         code = 0

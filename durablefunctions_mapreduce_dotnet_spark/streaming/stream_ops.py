@@ -96,7 +96,8 @@ def run_to_memory(
     # streaming_ewma (150 rows!): 1.92 → 1.52 s min-of-4 interleaved,
     # outputs asserted identical — the boundary was pure overhead
     # (guide §4: eliminate the Python boundary; §6: no row-path driver
-    # transfers).
+    # transfers).  The checkpoint cannot be recomputed once released:
+    # consume ``out`` fully before any ``session.release_pins``.
     out = tbl.localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
     return out

@@ -176,12 +176,9 @@ def test_global_concurrency_matches_single_window(spark):
         global_interval_concurrency,
     )
 
-    pinned = []
     got = {
         r.t_us: r.concurrency
-        for r in global_interval_concurrency(
-            df, F.col("s"), F.col("e"), pinned=pinned
-        ).collect()
+        for r in global_interval_concurrency(df, F.col("s"), F.col("e")).collect()
     }
     # independent reference: plain python sweep
     from collections import Counter
@@ -195,8 +192,6 @@ def test_global_concurrency_matches_single_window(spark):
         acc += net[t]
         exp[t] = acc
     assert got == exp
-    for df_ in pinned:
-        df_.unpersist()
 
 
 def test_scd2_collapses_repeats_and_handles_nulls(spark):
@@ -553,30 +548,6 @@ def test_asof_forward_skew_width_matches_ts_units(spark, monkeypatch):
         lt, rt, key="k", payload={"v": "v"}, skew_keys=[7], skew_bucket_seconds=50.0
     ).collect()
     assert captured["w"] == 50.0 * 1_000_000.0
-
-
-def test_pagerank_pinned_release_contract(spark):
-    """pagerank exposes the same pinned=[] release contract as the other
-    multi-pass operators: the cached edge/node/degree frames AND each
-    persisted round (r15: every round but the last is pinned — it feeds
-    three consumers) are handed back so long-lived sessions can
-    unpersist them."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (2, 1)], "src long, dst long"
-    )
-    pinned = []
-    ranks = pagerank(edges, iters=2, pinned=pinned)
-    assert ranks.count() == 3
-    # ew + nodes + dang_nodes + 1 persisted round (iters - 1)
-    assert len(pinned) == 4
-    for df in pinned:
-        assert df.storageLevel.useMemory or df.storageLevel.useDisk
-        df.unpersist()
-    assert not any(
-        df.storageLevel.useMemory or df.storageLevel.useDisk for df in pinned
-    )
 
 
 def test_connected_components_opaque_checkpoint_fn_still_works(spark):

@@ -418,45 +418,6 @@ def test_sssp_keeps_longer_hop_cheaper_path(spark):
     assert one == {1: 0, 2: 10, 3: 1}
 
 
-def test_loop_operators_pinned_release_contract(spark):
-    """r14 VERDICT #3: the fixed-round loop operators persist the
-    adjacency plus every uncut round — a long-lived session must be
-    able to release those pins, or at scale the executor storage pool
-    fills with dead rounds.  With ``pinned=[]`` the caller gets every
-    persisted frame; unpersisting them leaves NO net growth in the
-    session's persisted-RDD count."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        landmark_bfs,
-        sssp_bounded,
-    )
-
-    jsc = spark.sparkContext._jsc
-    # A lazily-unpersisted block from an earlier test can vanish between
-    # our two samples — pin the floor by purging first.
-    for rdd in jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-    before = jsc.getPersistentRDDs().size()
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (8, 9)], "src bigint, dst bigint"
-    )
-    lms = spark.createDataFrame([(1,)], "lm bigint")
-    pins: list = []
-    out = landmark_bfs(edges, lms, max_depth=3, pinned=pins)
-    assert out.count() > 0  # action materializes the pins
-    # depth 1..3, none hits the every-6th lazy cut: 3 rounds + adjacency
-    assert len(pins) == 4
-    wedges = spark.createDataFrame(
-        [(1, 2, 10), (1, 3, 1), (3, 2, 1)], "src bigint, dst bigint, w bigint"
-    )
-    out2 = sssp_bounded(wedges, 1, rounds=2, pinned=pins)
-    assert out2.count() > 0
-    assert len(pins) == 4 + 3  # 2 rounds + adjacency
-    for df in pins:
-        df.unpersist()
-    assert jsc.getPersistentRDDs().size() == before
-
-
 def test_mix_schedule_stride_bound(spark):
     """The stride guarantee the mix-schedule query sells: after ANY
     prefix of n steps, every source's emission count stays within 1 of

@@ -101,27 +101,3 @@ def test_grid_layout_audit_pruning_and_balance(spark):
     assert (zrd.max_b0 - zrd.min_b0).mean() <= 16  # ~8 ideal, 2x slack
     assert (zrd.max_b1 - zrd.min_b1).mean() <= 16
     assert (lin.max_b1 - lin.min_b1).mean() >= 48  # linear: full width
-
-
-def test_grid_layout_audit_pinned_release_contract(spark):
-    """r14 VERDICT #3: the audit pins two frames; the base projection
-    must be released internally once job 3 has run, and the coded frame
-    must land in the caller's ``pinned`` list so a long-lived session
-    can release it — leaving no net persisted-RDD growth."""
-    from durablefunctions_mapreduce_dotnet_spark.sources.layout import (
-        grid_layout_audit,
-    )
-
-    jsc = spark.sparkContext._jsc
-    for rdd in jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-    before = jsc.getPersistentRDDs().size()
-
-    e = read_table(spark, SF_DIR, "events")
-    pins: list = []
-    out = grid_layout_audit(e, COLS, "event_id", bits=6, n_files=8, pinned=pins)
-    assert out.count() > 0
-    assert len(pins) == 1  # the coded frame; base was released internally
-    for df in pins:
-        df.unpersist()
-    assert jsc.getPersistentRDDs().size() == before

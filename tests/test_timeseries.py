@@ -137,26 +137,6 @@ def test_gap_fill_matches_pandas_reference_on_random_series(spark):
         assert (both_nan | np.isclose(a, b, rtol=1e-12, equal_nan=False)).all(), c
 
 
-def test_gapfill_pinned_escape_hatch(spark):
-    """Callers in long-lived sessions can deterministically release the
-    internal MEMORY_AND_DISK pin: gap_fill appends exactly the cached
-    frame to `pinned`, and results are unaffected by unpersisting it
-    after consumption."""
-    from durablefunctions_mapreduce_dotnet_spark.sources.readers import read_table
-
-    from .conftest import SF_DIR
-
-    e = read_table(spark, SF_DIR, "events")
-    pins = []
-    out = gap_fill(e, "event_type", "ts", "value", 900, pinned=pins)
-    rows = out.count()
-    assert rows > 0 and len(pins) == 1
-    assert pins[0].storageLevel.useMemory or pins[0].storageLevel.useDisk
-    pins[0].unpersist(blocking=True)
-    assert not (pins[0].storageLevel.useMemory or pins[0].storageLevel.useDisk)
-    assert out.count() == rows  # plan still valid, just uncached
-
-
 def test_sax_motif_finds_planted_scaled_motif(spark):
     """A motif repeated later in the series at a different scale and
     offset (y = 3x + 40) must be the rank-1 pair with near-zero
