@@ -1419,8 +1419,9 @@ def q_curation_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang_bucket")
         )
         # materialize before the snapshot dir is removed — the result is
-        # |langs|+1 rows, metadata-sized by construction
-        return spark.createDataFrame(out.collect(), out.schema)
+        # |langs|+1 rows, metadata-sized by construction; the checkpoint
+        # stays in the JVM and session.release_pins frees it
+        return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -22,6 +22,7 @@ per-file averages (``Sample.cs:196-199, 226-233``).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,12 +84,18 @@ def read_trips_csv_faithful(spark: SparkSession, path: str) -> DataFrame:
 
 def list_csv_files(spark: SparkSession, path: str) -> DataFrame:
     """The S1 listing universe (``Sample.cs:119``) as a one-column
-    ``file`` frame: every file with at least one LINE (header-only
-    included), independent of row validity — the denominator the
-    reference's avg-of-file-averages counts.  (A 0-byte blob yields no
-    text rows in Spark; list such sources with a filesystem glob
-    instead.)"""
-    return spark.read.text(path).select(F.input_file_name().alias("file")).distinct()
+    ``file`` frame: every file the path matches, 0-byte and header-only
+    files included, independent of row validity — the denominator the
+    reference's avg-of-file-averages counts.
+
+    Built from the file index (``inputFiles()``, a metadata listing like
+    the reference's blob listing), so it runs no Spark job and reads no
+    byte.  Its strings equal ``input_file_name()`` on the scanned rows,
+    URI encoding included.  The frame is an Arrow-backed local relation;
+    a Python-list ``createDataFrame`` would start a Python worker to
+    read it."""
+    files = spark.read.text(path).inputFiles()
+    return spark.createDataFrame(pa.table({"file": pa.array(files, pa.string())}))
 
 
 def read_trips_csv_idiomatic(spark: SparkSession, path: str) -> DataFrame:

@@ -15,7 +15,10 @@ from durablefunctions_mapreduce_dotnet_spark.operators.flagship import (
     global_avg_by_dow,
     trips_records,
 )
-from durablefunctions_mapreduce_dotnet_spark.sources.trips import read_trips_csv_faithful
+from durablefunctions_mapreduce_dotnet_spark.sources.trips import (
+    list_csv_files,
+    read_trips_csv_faithful,
+)
 
 HEADER = (
     "VendorID,tpep_pickup_datetime,tpep_dropoff_datetime,passenger_count,trip_distance,"
@@ -141,3 +144,58 @@ def test_dotnet_double_str_rules():
     assert dotnet_double_str(12.3456) == "12.3456"  # shortest round-trip
     assert dotnet_double_str(0.1 + 0.2) == "0.30000000000000004"
     assert dotnet_double_str(1.5e-5) == "1.5E-05"   # uppercase exponent
+
+
+def _by_dow(df):
+    return [(r["dow"], r["avg_speed"]) for r in df.collect()]
+
+
+def test_every_listed_file_counts_like_the_oracle(spark, tmp_path):
+    """The listing universe is every file the path matches (Sample.cs:119),
+    as in the DuckDB oracle's ``read_text``: a valid Sunday trip at 10 mph
+    in a.csv, a valid Monday trip at 20 mph in ``sp ace.csv`` (its
+    URI-encoded name must match between listing and scan), header-only
+    b.csv and 0-byte c.csv make 4 files in the denominator."""
+    import duckdb
+
+    from durablefunctions_mapreduce_dotnet_spark.queries.flagship_q import (
+        _CSV_FAITHFUL_SQL,
+        _TRIPS_GLOB,
+    )
+
+    (tmp_path / "a.csv").write_text(
+        HEADER + "\n" + row(1, "2017-01-01 00:00:00", "2017-01-01 01:00:00", 10) + "\n"
+    )
+    (tmp_path / "b.csv").write_text(HEADER + "\n")
+    (tmp_path / "c.csv").write_text("")
+    (tmp_path / "sp ace.csv").write_text(
+        HEADER + "\n" + row(1, "2017-01-02 00:00:00", "2017-01-02 01:00:00", 20) + "\n"
+    )
+    glob = str(tmp_path / "*.csv")
+    got = _by_dow(
+        flagship_trips(read_trips_csv_faithful(spark, glob), files=list_csv_files(spark, glob))
+    )
+    assert got == [(0, 2.5), (1, 5.0)] + [(d, 0.0) for d in range(2, 7)]
+    oracle = duckdb.connect().execute(_CSV_FAITHFUL_SQL.replace(_TRIPS_GLOB, glob)).df()
+    assert got == list(zip(oracle["dow"].tolist(), oracle["avg_speed"].tolist()))
+
+
+def test_header_only_listed_files_give_seven_zero_rows(spark, tmp_path):
+    for name in ("x.csv", "y.csv"):
+        (tmp_path / name).write_text(HEADER + "\n")
+    glob = str(tmp_path / "*.csv")
+    got = _by_dow(
+        flagship_trips(read_trips_csv_faithful(spark, glob), files=list_csv_files(spark, glob))
+    )
+    assert got == [(d, 0.0) for d in range(7)]
+
+
+def test_empty_trips_without_listing_give_no_rows(spark, tmp_path):
+    (tmp_path / "x.csv").write_text(HEADER + "\n")
+    trips = read_trips_csv_faithful(spark, str(tmp_path / "*.csv"))
+    assert flagship_trips(trips).collect() == []
+
+
+def test_output_is_ordered_by_dow(spark, trips_dir):
+    trips = read_trips_csv_faithful(spark, trips_dir + "/trips-*.csv")
+    assert [d for d, _ in _by_dow(flagship_trips(trips.repartition(5)))] == list(range(7))

@@ -24,6 +24,36 @@ def test_flagship_prunes_and_pushes(spark):
     assert_pushed_filters(df, "GreaterThan(value,0.0)")
 
 
+def test_flagship_csv_is_one_scan_without_join(spark):
+    """The listing universe comes from the file index, not a second scan,
+    and zero-fill is a conditional aggregate, not a scaffold join: one
+    text scan, no join, the per-file and the global exchange only."""
+    from durablefunctions_mapreduce_dotnet_spark.queries.flagship_q import (
+        q_flagship_csv_faithful,
+    )
+
+    plan = explain_str(q_flagship_csv_faithful(spark, SF_DIR), "simple")
+    assert plan.count("FileScan text") == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.count("Exchange") <= 2, plan
+
+
+def test_flagship_parquet_without_listing_is_one_scan(spark, tmp_path):
+    """Without a listing, the universe is every scanned row's file,
+    valid or not, taken from the same scan."""
+    from durablefunctions_mapreduce_dotnet_spark.operators.flagship import flagship_trips
+    from durablefunctions_mapreduce_dotnet_spark.queries.flagship_q import _TRIPS_GLOB
+    from durablefunctions_mapreduce_dotnet_spark.sources.trips import (
+        read_trips_csv_faithful,
+        read_trips_parquet,
+    )
+
+    path = str(tmp_path / "trips.parquet")
+    read_trips_csv_faithful(spark, _TRIPS_GLOB).drop("file").write.parquet(path)
+    plan = explain_str(flagship_trips(read_trips_parquet(spark, path)), "simple")
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_filter_pushdown_on_lineitem(spark):
     li = read_table(spark, SF_DIR, "lineitem").where(F.col("l_quantity") > 45).select(
         "l_orderkey", "l_quantity"
