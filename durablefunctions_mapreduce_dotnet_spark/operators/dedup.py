@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .graph import CheckpointFn, local_checkpoint
+from ..session import cut
 
 
 def _widen(df: DataFrame) -> DataFrame:
@@ -161,7 +161,6 @@ def minhash_candidates(
     bands: int = 21,
     shingle_k: int = 9,
     max_bucket: int = 200,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -177,7 +176,7 @@ def minhash_candidates(
     (e.g. boilerplate-heavy shingles) would otherwise produce a
     quadratic task.
     """
-    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k, checkpoint)
+    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k)
     return minhash_candidates_from_hashes(hs_tbl, id_col, num_hashes, bands, max_bucket)
 
 
@@ -186,21 +185,15 @@ def shingle_hash_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 9,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """(id, hs: array<long>) — one shingling+hashing pass over the corpus,
     eagerly checkpointed because BOTH candidate generation and Jaccard
     verification consume it (without pinning, the most expensive stage of
-    the pipeline would execute once per consumer branch).
-
-    ``checkpoint`` picks the lineage cut (same contract as
-    ``graph.connected_components``): the ``local_checkpoint`` default is
-    right single-node but dies with a lost executor — pass
-    ``graph.reliable_checkpoint(dir)`` (or a DISK_ONLY persist) on a
-    real cluster."""
+    the pipeline would execute once per consumer branch).  The cut is
+    ``session.cut``: reliable once the context has a checkpoint dir."""
     src = _widen(df.select(F.col(id_col), F.col(text_col)))
     lc = src.select(F.col(id_col), F.lower(F.col(text_col)).alias("_lc"))
-    return checkpoint(
+    return cut(
         lc.select(
             F.col(id_col), shingle_expr("_lc", shingle_k, lowered=True).alias("sh")
         )
@@ -449,7 +442,6 @@ def jaccard_verify(
     shingle_k: int = 9,
     threshold: float = 0.6,
     hashes: DataFrame | None = None,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs only (never all-pairs).
     Integer-ratio arithmetic → deterministic doubles.
@@ -466,14 +458,14 @@ def jaccard_verify(
     at scale candidates are a vanishing fraction of the corpus.
 
     ``pairs`` feeds multiple branches (ids-union + final join) and is
-    pinned through ``checkpoint`` (default: eager localCheckpoint) —
-    candidate-sized, tiny.  r14 note: an experiment dropping this cut
-    when ``hashes`` is provided (single consumer) measured consistently
+    pinned through an eager ``session.cut`` — candidate-sized, tiny.
+    r14 note: an experiment dropping this cut when ``hashes`` is
+    provided (single consumer) measured consistently
     SLOWER end-to-end (dedup_minhash ~2.6 vs ~2.0 s, cluster_sizes
     ~3.3 vs ~2.3 s interleaved A/B): materialized candidate sizes let
     AQE plan the verify join from exact stats, which beats saving the
     checkpoint job — so the eager cut stays unconditional."""
-    pairs = checkpoint(pairs)
+    pairs = cut(pairs)
     if hashes is None:
         ids = (
             pairs.select(F.col("id_a").alias(id_col))
@@ -507,14 +499,13 @@ def minhash_near_dup_pairs(
     bands: int = 21,
     shingle_k: int = 9,
     max_bucket: int = 200,
-    checkpoint: CheckpointFn = local_checkpoint,
     fast: bool = True,
     table: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline sharing ONE shingling pass:
     hash table → banded candidates → exact-Jaccard verification.
-    ``checkpoint`` picks the lineage cut for the shared pass and the
-    candidate set (graph.reliable_checkpoint(dir) on a cluster).
+    The shared pass and the candidate set are cut through ``session.cut``
+    (reliable once the context has a checkpoint dir).
 
     ``fast=True`` (default) computes shingle hashes AND signatures in a
     single fused Arrow kernel (:func:`shingle_minhash_table_fast`);
@@ -523,9 +514,9 @@ def minhash_near_dup_pairs(
 
     Negative result pinned (r15, ``git show
     de8968f:plans/r15/ab_dedup_cuts.py``): dropping
-    the candidate-pairs eager cut (identity ``checkpoint`` for the
-    pairs, sign table still cut) to save one serialized driver job was
-    re-measured for the construction-dominated single-consumer queries
+    the candidate-pairs eager cut (pairs uncut, sign table still cut)
+    to save one serialized driver job was re-measured for the
+    construction-dominated single-consumer queries
     (dedup_keep_best / dedup_cluster_sizes, where the pairs feed one
     bounded CC collect rather than the final action) — and LOST both
     times: 1.71 → 2.35 s and 1.81 → 2.28 s (quiet interleaved min-of-4,
@@ -547,7 +538,7 @@ def minhash_near_dup_pairs(
         # Arrow pass once per racing stage — the EAGER checkpoint that
         # materializes it first is load-bearing, not overhead
         # (measured r14: lazy persist regressed dedup_minhash ~2x).
-        tbl = table if table is not None else checkpoint(
+        tbl = table if table is not None else cut(
             shingle_minhash_table_fast(
                 df, text_col, id_col, shingle_k, num_hashes, bands=bands
             )
@@ -557,13 +548,13 @@ def minhash_near_dup_pairs(
         )
         return jaccard_verify(
             df, cand, text_col, id_col, shingle_k, threshold,
-            hashes=tbl.select(id_col, "hs"), checkpoint=checkpoint,
+            hashes=tbl.select(id_col, "hs"),
         )
-    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k, checkpoint)
+    hs_tbl = shingle_hash_table(df, text_col, id_col, shingle_k)
     cand = minhash_candidates_from_hashes(hs_tbl, id_col, num_hashes, bands, max_bucket)
     return jaccard_verify(
         df, cand, text_col, id_col, shingle_k, threshold,
-        hashes=hs_tbl, checkpoint=checkpoint,
+        hashes=hs_tbl,
     )
 
 
@@ -1590,7 +1581,6 @@ def winnowing_overlap_pairs(
     window: int = 4,
     min_shared: int = 5,
     max_postings: int = 200,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowed fingerprints —
     partial-overlap candidates (copied passages, boilerplate blocks).
@@ -1601,7 +1591,7 @@ def winnowing_overlap_pairs(
     the join, so candidates stay linear; only (id, hash) scalars
     shuffle, never text.
     """
-    fps = checkpoint(
+    fps = cut(
         _widen(winnow_fingerprints(df, text_col, id_col, k, window)).select(
             F.col(id_col), F.explode("fingerprints").alias("fp")
         )
@@ -1634,7 +1624,6 @@ def minhash_near_dup_incremental(
     bands: int = 21,
     shingle_k: int = 9,
     max_bucket: int = 200,
-    checkpoint: CheckpointFn = local_checkpoint,
     history_table: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs for a RECURRING ingest: verified pairs
@@ -1678,7 +1667,7 @@ def minhash_near_dup_incremental(
     # the final job (banding shuffle + verify-hash exchanges): EAGER
     # checkpoints materialize them first so neither Arrow pass runs
     # twice (see minhash_near_dup_pairs — lazy pins measurably regress).
-    nb = checkpoint(
+    nb = cut(
         shingle_minhash_table_fast(
             new_batch, text_col, id_col, shingle_k, num_hashes, bands=bands
         )
@@ -1688,7 +1677,7 @@ def minhash_near_dup_incremental(
             new_batch.select(id_col), id_col, "left_anti"
         )
     else:
-        hist_tbl = checkpoint(
+        hist_tbl = cut(
             shingle_minhash_table_fast(
                 history, text_col, id_col, shingle_k, num_hashes, bands=bands
             )
@@ -1726,5 +1715,5 @@ def minhash_near_dup_incremental(
     hashes = nb.unionByName(hs).select(id_col, "hs")
     return jaccard_verify(
         universe, pairs, text_col, id_col, shingle_k, threshold,
-        hashes=hashes, checkpoint=checkpoint,
+        hashes=hashes,
     )

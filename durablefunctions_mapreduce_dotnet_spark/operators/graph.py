@@ -10,54 +10,10 @@ classic case SURVEY.md §2.2 reserves for loops over DataFrames.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CheckpointFn = Callable[[DataFrame], DataFrame]
-
-
-def local_checkpoint(df: DataFrame) -> DataFrame:
-    """Default lineage cut: executor-memory-pinned, NOT fault-tolerant.
-    Right for single-node / test harnesses; on a real cluster a lost
-    executor loses the blocks and the job dies."""
-    return df.localCheckpoint(eager=True)
-
-
-def _local_checkpoint_lazy(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False)
-
-
-# Optional protocol: a CheckpointFn may carry a ``.lazy`` sibling that cuts
-# lineage WITHOUT forcing materialization.  Iterative operators that follow
-# every cut with an aggregation (the convergence probe) use it so the probe
-# job itself materializes the checkpoint — one pass over the frame per round
-# instead of two.  Custom checkpoint fns without ``.lazy`` get the eager
-# two-job path; results are identical either way.
-local_checkpoint.lazy = _local_checkpoint_lazy
-
-
-def reliable_checkpoint(checkpoint_dir: str) -> CheckpointFn:
-    """Cluster-grade lineage cut: HDFS/object-store ``df.checkpoint``.
-    Survives executor loss; this is the 100 TB setting.  Sets the
-    context checkpoint dir on first use."""
-
-    def _set_dir(df: DataFrame) -> None:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(checkpoint_dir)
-
-    def cut(df: DataFrame) -> DataFrame:
-        _set_dir(df)
-        return df.checkpoint(eager=True)
-
-    def cut_lazy(df: DataFrame) -> DataFrame:
-        _set_dir(df)
-        return df.checkpoint(eager=False)
-
-    cut.lazy = cut_lazy
-    return cut
+from ..session import cut
 
 
 def connected_components(
@@ -65,7 +21,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    checkpoint: CheckpointFn = local_checkpoint,
     pointer_jumping: bool = False,
     steps_per_probe: int = 2,
     pairs_distinct_ordered: bool = False,
@@ -76,9 +31,9 @@ def connected_components(
 
     Per iteration: one equi-join (neighbor labels) + one min-groupBy —
     two shuffles keyed on node id, both combiner-reduced; lineage is cut
-    per round with ``checkpoint`` so plans stay O(1) instead of growing.
-    Default is ``local_checkpoint`` (fast, single-node harness); pass
-    ``reliable_checkpoint(dir)`` on a cluster for fault-tolerant cuts.
+    per round with ``session.cut`` so plans stay O(1) instead of growing
+    (local cuts by default; reliable ones once the context has a
+    checkpoint dir).
     Converges in O(component diameter) rounds: near-dup clusters are
     clique-ish (verified pairs), so diameter stays small (2-4) no matter
     the corpus size — at 1000-executor scale iteration count is
@@ -137,11 +92,9 @@ def connected_components(
     without reaching the fixpoint — unconverged labels are
     silently-wrong clusters, never returned.
     """
-    # A checkpoint fn may carry a ``.lazy`` sibling (see local_checkpoint):
-    # lineage is cut but materialization rides the NEXT job — here always
-    # the convergence probe, so each round costs one pass over labels, not
-    # two.  Opaque custom fns fall back to the eager two-job path.
-    cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
+    # Every cut is lazy: lineage is cut but materialization rides the
+    # NEXT job — here always the convergence probe, so each round costs
+    # one pass over labels, not two.
     proj = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if small_graph_threshold:
         # ONE bounded job answers BOTH "is it small?" and "give me the
@@ -196,15 +149,17 @@ def connected_components(
     # symmetrizing union consumes it twice, and without this cut an
     # expensive upstream (e.g. the MinHash verify join) would be
     # computed once per branch in the materialization job.
-    one = cut_lazy(proj)
+    one = cut(proj, eager=False)
     sym = one.union(one.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    edges = cut_lazy(
-        sym.repartition("u") if pairs_distinct_ordered else sym.distinct()
+    edges = cut(
+        sym.repartition("u") if pairs_distinct_ordered else sym.distinct(),
+        eager=False,
     )
-    labels = cut_lazy(
+    labels = cut(
         edges.select(F.col("u").alias("n")).distinct().withColumn(
             "component", F.col("n")
-        )
+        ),
+        eager=False,
     )
     # Convergence probe: labels are per-node MONOTONICALLY non-increasing,
     # so the total sum strictly decreases iff any label changed across the
@@ -241,7 +196,7 @@ def connected_components(
         for _ in range(min(max(steps_per_probe, 1), max_iter - steps)):
             labels = step(labels)
             steps += 1
-        labels = cut_lazy(labels)
+        labels = cut(labels, eager=False)
         new_sum = labels.agg(probe).first()[0]
         # None = empty label set (no pairs at all): trivially converged
         if new_sum is None or (checksum is not None and new_sum == checksum):
@@ -256,7 +211,7 @@ def connected_components(
     # while a changed checksum proves the diameter truly exceeds
     # max_iter (raise).
     if checksum is not None:
-        if cut_lazy(step(labels)).agg(probe).first()[0] == checksum:
+        if cut(step(labels), eager=False).agg(probe).first()[0] == checksum:
             return labels
     raise RuntimeError(
         f"connected_components: no fixpoint after max_iter={max_iter} "
@@ -271,7 +226,6 @@ def canonicalize_clusters(
     id_col: str = "doc_id",
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint: CheckpointFn = local_checkpoint,
     pairs_distinct_ordered: bool = False,
     small_graph_threshold: int = 65_536,
     pointer_jumping: bool = False,
@@ -286,7 +240,7 @@ def canonicalize_clusters(
     distinct with src < dst; solve tiny pair graphs driver-side; add
     the label-chasing join for chain graphs)."""
     comp = connected_components(
-        pairs, src, dst, checkpoint=checkpoint,
+        pairs, src, dst,
         pairs_distinct_ordered=pairs_distinct_ordered,
         small_graph_threshold=small_graph_threshold,
         pointer_jumping=pointer_jumping,
@@ -309,7 +263,6 @@ def incremental_components(
     comp: str = "component",
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint: CheckpointFn = local_checkpoint,
     broadcast_delta: bool = True,
 ) -> DataFrame:
     """Incrementally maintain min-label connected components when a NEW
@@ -368,7 +321,7 @@ def incremental_components(
         )
         .where(F.col("u") != F.col("v"))
     )
-    delta = connected_components(contracted, "u", "v", checkpoint=checkpoint)
+    delta = connected_components(contracted, "u", "v")
     dl = delta.select(
         F.col("n").alias("_rep"), F.col("component").alias("_new")
     )
@@ -404,7 +357,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint: CheckpointFn | None = None,
 ) -> DataFrame:
     """Edge-multiplicity-weighted PageRank with dangling-mass
     redistribution, fixed ``iters`` power iterations — the crawl/domain
@@ -424,10 +376,10 @@ def pagerank(
     1-row cross join (the scalar-subquery shape, BNLJ-allowlisted).
 
     ``iters`` is deliberately small; each round's ranks is PERSISTED
-    (it feeds three consumers — see the loop comment) and, when a
-    ``checkpoint`` is supplied, lineage is cut lazily every 6th round,
-    bounding logical-plan growth (~2^rounds between cuts, the
-    landmark_bfs discipline) for convergence-scale iteration counts
+    (it feeds three consumers — see the loop comment) and lineage is
+    cut lazily every 6th round, bounding logical-plan growth
+    (~2^rounds between cuts, the landmark_bfs discipline) for
+    convergence-scale iteration counts
     (same contract as :func:`connected_components`).  N (node count)
     is a driver scalar by design — the one collect is one long.
 
@@ -534,8 +486,8 @@ def pagerank(
             # the per-round cut was the cost, not the fix.  Values are
             # bit-identical (cuts/pins change execution, not math).
             ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            if checkpoint is not None and (i + 1) % 6 == 0:
-                ranks = getattr(checkpoint, "lazy", checkpoint)(ranks)
+            if (i + 1) % 6 == 0:
+                ranks = cut(ranks, eager=False)
     return ranks.select("node", F.round("rank", 9).alias("rank")).orderBy("node")
 
 
@@ -543,7 +495,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """(node, n_triangles) — how many triangles each node closes in the
     undirected graph of ``edges`` (self-loops and duplicate/reverse
@@ -604,7 +555,7 @@ def triangle_counts(
     uk = F.struct(F.col("du").alias("d"), F.col("u").alias("i"))
     vk = F.struct(F.col("dv").alias("d"), F.col("v").alias("i"))
     fwd = uk < vk
-    oriented = checkpoint(
+    oriented = cut(
         w.select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
@@ -638,7 +589,6 @@ def label_propagation(
     iters: int = 4,
     src: str = "id_a",
     dst: str = "id_b",
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan et
     al. 2007, the GraphFrames/Pregel formulation): every node starts as
@@ -667,9 +617,9 @@ def label_propagation(
     (labels_i feeds only round i+1's join), so the logical plan grows
     LINEARLY and no per-round pin or cut is needed at all — the fixed
     ``iters`` rounds compile once and ride the caller's single action;
-    ``checkpoint``'s lazy sibling cuts lineage every 6th round to keep
-    long runs bounded (each per-round eager cut used to cost a
-    scheduled driver job — 5 jobs before the action ran).
+    a lazy ``session.cut`` every 6th round keeps long runs bounded
+    (each per-round eager cut used to cost a scheduled driver job — 5
+    jobs before the action ran).
 
     r15: the symmetrized edge list's EAGER cut became a PERSIST — the
     whole query now compiles once and rides ONE action, removing the
@@ -687,7 +637,6 @@ def label_propagation(
     """
     from pyspark.storagelevel import StorageLevel
 
-    cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -722,7 +671,7 @@ def label_propagation(
             .select(F.col("d").alias("node"), (-F.col("m.nl")).alias("label"))
         )
         if i % 6 == 0:
-            labels = cut_lazy(labels)
+            labels = cut(labels, eager=False)
     return labels
 
 
@@ -802,7 +751,6 @@ def kcore(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 30,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """The k-CORE of the undirected graph: the maximal subgraph in which
     every node has degree ≥ k, found by iterative peeling (remove all
@@ -843,18 +791,19 @@ def kcore(
     degree.  Raises ``RuntimeError`` if ``max_rounds`` passes without a
     fixpoint — a truncated peel is a silently-wrong (too large) core.
     """
-    cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
     # a self-loop would grant its node +2 un-peelable degree and could
     # hold it in the core forever — canonicalize away; duplicate edges
     # are the CALLER's contract (they count with multiplicity, matching
     # the oracle's plain row semantics)
-    one = cut_lazy(
+    one = cut(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
             F.col(src) != F.col(dst)
-        )
+        ),
+        eager=False,
     )
-    bi = cut_lazy(
-        one.union(one.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    bi = cut(
+        one.union(one.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        eager=False,
     )
     n_edges = bi.count()
     for _ in range(max_rounds):
@@ -865,10 +814,11 @@ def kcore(
         alive = bi.groupBy("u").agg(F.count(F.lit(1)).alias("_deg")).where(
             F.col("_deg") >= k
         ).select("u")
-        bi = cut_lazy(
+        bi = cut(
             bi.join(alive, "u", "left_semi").join(
                 alive.select(F.col("u").alias("v")), "v", "left_semi"
-            )
+            ),
+            eager=False,
         )
         new_edges = bi.count()
         if new_edges == n_edges:
@@ -891,7 +841,6 @@ def landmark_bfs(
     dst: str = "dst",
     lm_col: str = "lm",
     max_depth: int = 4,
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Multi-source BFS: exact hop distance from every landmark to every
     node within ``max_depth`` — the landmark/distance-sketch primitive
@@ -920,8 +869,8 @@ def landmark_bfs(
     Lineage discipline for a FIXED-depth loop (r14): each round is
     PERSISTED — the frame feeds both the visited union and the next
     frontier, so the pin shares one computation without any per-round
-    driver work — and ``checkpoint``'s lazy sibling cuts lineage only
-    every 6th round.  The depth budget is fixed, so unlike
+    driver work — and a lazy ``session.cut`` cuts lineage only every
+    6th round.  The depth budget is fixed, so unlike
     :func:`connected_components` no convergence probe exists between
     rounds; a per-round cut (eager OR lazy) forces one full Catalyst
     compile per round on the driver (``toRdd``; measured ~0.6 s each
@@ -944,7 +893,6 @@ def landmark_bfs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
     und = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -965,7 +913,7 @@ def landmark_bfs(
             .withColumn("dist", F.lit(depth))
         )
         if depth % 6 == 0:
-            nxt = cut_lazy(nxt)
+            nxt = cut(nxt, eager=False)
         else:
             nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
         visited = visited.unionByName(nxt)
@@ -980,7 +928,6 @@ def sssp_bounded(
     src: str = "src",
     dst: str = "dst",
     w: str = "w",
-    checkpoint: CheckpointFn = local_checkpoint,
 ) -> DataFrame:
     """Bounded-round single-source shortest path (Bellman-Ford): the
     exact minimum cost over paths of at most ``rounds`` edges, on the
@@ -993,8 +940,8 @@ def sssp_bounded(
     discipline matches :func:`landmark_bfs` (r14): the round budget is
     FIXED, so no convergence probe exists between rounds — each round
     is PERSISTED (the tentative frame feeds both the union and the
-    relaxation join) and ``checkpoint``'s lazy sibling cuts lineage
-    only every 6th round, bounding logical-plan growth without paying
+    relaxation join) and a lazy ``session.cut`` cuts lineage only every
+    6th round, bounding logical-plan growth without paying
     one Catalyst ``toRdd`` compile per round on the driver; the whole
     relaxation rides the caller's single action.  The adjacency is
     persisted REPARTITIONED ON ``u`` so the cached hash partitioning
@@ -1010,7 +957,6 @@ def sssp_bounded(
     uncut round stay persisted until ``session.release_pins``."""
     from pyspark.storagelevel import StorageLevel
 
-    cut_lazy: CheckpointFn = getattr(checkpoint, "lazy", checkpoint)
     und = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w).alias("w"))
         .union(
@@ -1034,7 +980,7 @@ def sssp_bounded(
             .agg(F.min("cost").alias("cost"))
         )
         if rnd % 6 == 0:
-            dist = cut_lazy(dist)
+            dist = cut(dist, eager=False)
         else:
             dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
     return dist

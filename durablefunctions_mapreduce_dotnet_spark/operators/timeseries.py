@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 
 def gap_fill(
     df: DataFrame,
@@ -279,7 +281,6 @@ def sax_similar_subsequences(
     paa: int = 4,
     k: int = 5,
     max_bucket: int = 500,
-    checkpoint=None,
 ) -> DataFrame:
     """Top-k most-similar non-overlapping subsequence pairs per series —
     z-normalized Euclidean distance over length-``m`` windows, the
@@ -303,10 +304,6 @@ def sax_similar_subsequences(
     waver on a cross-engine ulp.  Distances are ranked at 9 dp with a
     (start_a, start_b) tie-break and emitted at 6 dp.  Constant windows
     (std < 1e-9) are excluded — z is undefined there."""
-    if checkpoint is None:
-        from .graph import local_checkpoint
-
-        checkpoint = local_checkpoint
     order = Window.partitionBy(key_col).orderBy(F.col(ts_col), F.col(id_col))
     base = df.select(
         F.col(key_col).alias("key"),
@@ -397,7 +394,7 @@ def sax_similar_subsequences(
     ).select("key", "start", "z", "word")
     # one materialization: the window pipeline feeds the bucket-size
     # probe and BOTH sides of the candidate self-join
-    wins = checkpoint(wins)
+    wins = cut(wins)
     sizes = wins.groupBy("key", "word").agg(F.count("*").alias("_n"))
     wins = wins.join(
         sizes.where(F.col("_n") <= max_bucket).select("key", "word"),

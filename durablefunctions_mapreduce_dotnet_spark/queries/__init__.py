@@ -70,220 +70,10 @@ def all_oracles() -> dict[str, str]:
 #       streaming_q, timeseries_q, udf_q, analytics_q, linkage_q,
 #       graph_q
 #
-# Rotation log (which half occupied the 50-row window):
-#   r01, r02: HALF_A-ish original order (relational core driver-green twice)
-#   r03:      HALF_B first (all 42 LLM queries driver-green)
-#   r04:      HALF_A first
-#             (23 queries NEW in r04 — graph_pagerank, dedup_embedding_lsh,
-#             dedup_winnowing,
-#             curation_histogram, curation_histogram_equidepth,
-#             curation_quality_audit, curation_temperature_mix,
-#             text_tokens, text_entropy, text_lm_score,
-#             streaming_click_attribution, streaming_enriched_counts,
-#             window_concurrency, window_concurrency_global,
-#             funnel_steps, cohort_retention, window_scd2, cdc_apply,
-#             join_fuzzy_blocked, join_asof_forward,
-#             join_asof_nearest, time_gap_detect, anomaly_mad
-#             — joined HALF_B, so they face the driver when r05
-#             rotates; until then they rest on the local oracle
-#             mirror like every out-of-window query)
-#   r05:      HALF_B first
-#             (driver-verifies the 23 r04 additions for the first time,
-#             plus 12 NEW r05 queries — text_entropy_fast,
-#             text_lm_score_fast, text_normalize, json_variant,
-#             recursive_hierarchy, subq_lateral_topn,
-#             curation_split_groupaware, curation_chunk_overlap,
-#             curation_chunk_tokens, ann_quantized_topk,
-#             ann_quantized_rescored, agg_bitmap_distinct — all
-#             pinned via _WINDOW_FIRST; CORRECTNESS_r05 came back all
-#             green: every registered query has now faced the driver)
-#   r06:      HALF_A first
-#             (re-verifies the relational core, incl. the r05 as-of
-#             integer-ts bucket fix in joins.py; r06 newcomers pinned
-#             via _WINDOW_FIRST; CORRECTNESS_r06 came back all green —
-#             47 hash-exact + 3 rows-only by design, 0 failures)
-#   r07:      HALF_B first
-#             (re-verifies the LLM surface, incl. the r06 fused MinHash
-#             kernel in dedup.py that HALF_B queries now route through;
-#             r07 newcomers pinned via _WINDOW_FIRST; CORRECTNESS_r07
-#             came back all green — 40 hash-exact + 10 rows-only by
-#             design, 0 failures; every r07 pin earned its row)
-#   r08:      HALF_A first
-#             (re-verifies the relational core under rotation, incl. the
-#             new sql_q raw-SQL face for the first time in-window;
-#             r08 newcomers pinned via _WINDOW_FIRST; CORRECTNESS_r08
-#             came back 44 hash-exact + 5 rows-only by design + 1 red:
-#             time_seasonal_decompose_m12 rows+schema matched but the
-#             value hash didn't — stays pinned with a re-canonicalized
-#             FP emission for r09)
-#   r09:      HALF_B first
-#             (re-verifies the LLM surface, incl. the r08 shingle
-#             lowered=True contract, size-gated union-find CC, and the
-#             interpreted-HOF materialization sweep that HALF_B queries
-#             route through; r09 newcomers + the m12 re-face pinned via
-#             _WINDOW_FIRST; CORRECTNESS_r09 came back all green —
-#             45 hash-exact + 5 rows-only by design, 0 failures; every
-#             r09 pin earned its row, incl. the m12 holdover)
-#   r10:      HALF_A first
-#             (re-verifies the relational core, incl. the 15 r09 TPC-H
-#             additions under rotation for a second driver pass; r10
-#             newcomers pinned via _WINDOW_FIRST; CORRECTNESS_r10 came
-#             back 50/50 hash-exact, zero red rows — every r10 pin
-#             earned its row and was dropped)
-#   r11:      HALF_B first
-#             (re-verifies the LLM surface under rotation; r11 newcomers
-#             — the PQ/IVFADC exhaustive exact twins, the BMP and WAV
-#             hash-exact multimodal queries, the HLL merge-invariance
-#             check, the watermark late-drop lifecycle, the left-outer
-#             stream join, the mergeSchema evolution read — pinned via
-#             _WINDOW_FIRST, along with the rows-only sketch queries
-#             from the out-half so their no_oracle rows stay fresh, and
-#             ts_motif_topk re-pinned after its chain rework (_REPINNED).
-#             CORRECTNESS_r11 came back 38 hash-exact + 12 rows-only by
-#             design, 0 failures — every r11 pin earned its row,
-#             including the ts_motif_topk re-pin, and was dropped)
-#   r12:      HALF_A first  <-- CURRENT STATE of _ROTATION below
-#             (re-verifies the relational core under rotation, incl. the
-#             r11 streaming left-outer frontier fix resting on the
-#             mirror; the 11 r12 newcomers pinned via _WINDOW_FIRST:
-#             ann_ivf_refined_exhaustive, curation_decontaminate,
-#             text_langid_trigram(+_fast), streaming_sessionize,
-#             curation_url_normalize, ann_filtered, ann_mmr_rerank,
-#             dedup_clusters_incremental, dedup_clusters_pj,
-#             curation_pack_efficiency — every one hash-exact against
-#             the local mirror at sf0.001 AND sf0.01 (strict
-#             dtype-equal) before pinning.
-#             Scale-probe re-measurement on a quiet host (r11 VERDICT
-#             #3, same protocol as the r11 dedup_clusters/triangles
-#             re-probe): time_gapfill_interpolate sf1.0/sf0.1 ratio
-#             9.73 -> 6.71 — the 9.7 was contention noise;
-#             text_lm_score 9.1 -> 9.83 — stable at ~linear for 10x
-#             data, the expected cost of the deliberately
-#             oracle-shaped explode+join formulation (its Arrow twin
-#             text_lm_score_fast rides ratio ~5.9).  Official runs now
-#             record host_note in BENCH_DETAIL.json.)
-#   r13:      HALF_B first
-#             (CORRECTNESS_r12 came back 50/50 hash-exact, zero red rows
-#             — every r12 pin earned its row and was dropped.  r13
-#             re-verifies the LLM surface under rotation; the r12 driver
-#             artifacts were committed at round open by the driver itself
-#             (commit 711ca3b), closing the 5-round working-tree-drift
-#             streak.  Environment gates re-probed at r13 open: protobuf
-#             still absent (no transformWithStateInPandas), Pillow still
-#             absent (BMP-only image decode) — both gates hold.
-#             r13 newcomers pinned via _WINDOW_FIRST: ann_ivf_incremental
-#             (frozen-centroid batch assignment + per-cell drift report —
-#             completes the incremental triad), curation_pack_bestfit +
-#             curation_pack_policy_audit (FFD packer, recursive-CTE
-#             greedy oracle; bestfit fills strictly better than the
-#             lossless next-fit baseline and never truncates),
-#             text_topgram_concentration (Gopher top-gram coverage),
-#             ann_recall_audit (recall@5 of 4-probe IVF vs brute force)
-#             — every one hash-exact against the local mirror at
-#             sf0.001 AND sf0.01 before pinning; plus the
-#             time_gapfill_interpolate re-pin (chunked grid plan).
-#             Bench methodology (r12 VERDICT #2): BENCH_DETAIL now
-#             records per-query spread ((max-min)/min over the 3
-#             samples) + spread_median.  SIX full official runs were
-#             taken across the round as the headline grew 105->110
-#             (pack_bestfit/policy_audit/topgram joined at 109;
-#             split_bestfit at 110; the two recall audits grew only the
-#             registry): 140.83 / 136.95 / 165.26 / 136.27 / 158.83 /
-#             146.87 s.  The host threw recurring EXTERNAL load storms
-#             (loadavg spikes to 6-15 observed with nothing of ours
-#             running; runs 3/5/6 each caught one — clusters of
-#             run-order-adjacent queries uniformly slow, some with LOW
-#             spread = all three reps inside the storm), and quiet
-#             runs still show sub-second whipsaw up to 2x in BOTH
-#             directions with spreads 0.4-1.9.  The decisive check:
-#             per-query MIN over all six runs on the 105 queries
-#             common with the r12 quiet baseline = 121.0 s vs 120.6 s
-#             (+0.3%) with ZERO >1.3x survivors above 0.5 s — no plan
-#             regressed; every single-run delta is host noise, now
-#             provable in-round from the committed spread columns
-#             instead of by archaeology.  The committed BENCH_DETAIL
-#             is run 6 (146.87 s / 110, the better of the two runs
-#             whose coverage matches the final 250-query registry);
-#             new-query min costs: ann_ivf_incremental 0.66,
-#             pack_bestfit 0.83, pack_policy_audit 1.06,
-#             pack_split_bestfit 1.01, topgram 1.52 s.  A seventh
-#             confirmation run of the final code landed 146.96 s —
-#             within 0.1% of the committed record: the ~147 s level is
-#             the reproducible today-number for this host, with the
-#             121-ish min-of-runs showing what a truly quiet host
-#             yields.
-#             Scale probe (gapfill grid now CHUNKED — r12 VERDICT #5):
-#             time_gapfill_interpolate sf1.0/sf0.1 ratio 7.43/7.82
-#             across the two runs — linear-cost proof: the emitted grid
-#             is sum-over-series(span/step), and the 10x replica
-#             multiplies SERIES count at identical per-series span, so
-#             grid rows grow exactly 10x; the chunked nested generators
-#             bound peak task memory at O(chunk + span/chunk)
-#             regardless, so a single full-span sparse series can no
-#             longer spike one task (pytest-pinned).
-#   r14:      HALF_A first  <-- CURRENT STATE of _ROTATION below
-#             (CORRECTNESS_r13 came back 50/50 green — 45 hash-exact +
-#             5 rows-only by design, zero red rows — every r13 pin
-#             earned its row (incl. the time_gapfill_interpolate re-pin)
-#             and was dropped; _REPINNED cleared.  The r13 driver
-#             artifacts were committed by the driver itself at round
-#             close (b0050ec) — clean tree at r14 open, second round in
-#             a row the drift remedy held.  Environment gates re-probed
-#             at r14 open: protobuf still absent (no
-#             transformWithStateInPandas), Pillow still absent
-#             (BMP-only image decode) — both gates hold.
-#             r14 re-verifies the relational core under rotation; r14
-#             newcomers pinned via _WINDOW_FIRST as they land.
-#             curation_url_normalize re-probe (r13 VERDICT #3): the
-#             bench min-of-runs reads 0.4946 over the first two r14
-#             official runs (a fresh-session quiet min-of-5 reads 0.78
-#             — cold regex JIT dominates outside the long bench
-#             session).  Plan re-audited via explain(formatted): NO
-#             join, so no broadcast to lose; the three exchanges are
-#             inherent (two-phase count-distinct agg pair + the orderBy
-#             range partition); SortAggregate is forced by string
-#             min/max in the agg buffer (20-host sorts, trivial); the
-#             regex projection is fused into the scan stage.  The URL
-#             operators are git-untouched since r12, so the 0.39→0.49
-#             delta on a regex-bound sub-second query is code-cache/JIT
-#             pressure from the registry-grown bench session, not a
-#             plan change — logged as noise, tracked by runs_per_query.
-#             Bench methodology (r13 VERDICT #2): the committed
-#             headline is now the per-query MIN over the round's
-#             official runs (merge-min under BENCH_EPOCH r14, per-run
-#             totals in a runs array) — run totals 165.3/142.2 merged
-#             to 136.4 over 111 queries.
-#             r14 newcomers (each hash-exact vs its DuckDB mirror at
-#             sf0.001 AND sf0.01 before pinning): ann_pipeline_end2end
-#             (RAG composite), ann_ivf_filtered_exhaustive +
-#             ann_filtered_recall (filtered-ANN audit axis),
-#             streaming_join_full_outer, multimodal_png_exact,
-#             curation_zorder_layout (equi-depth grid + equal-count
-#             tiles via distributed NTILE; band-filter touch counts
-#             read 64/64 linear vs ~17/64 zorder files),
-#             join_bloom_prefilter (bit_or-folded words, plain-join
-#             oracle), linkage_entity_resolution (golden record over
-#             blocked fuzzy + CC + survivorship),
-#             graph_bfs_landmarks (multi-source frontier loop),
-#             graph_sssp_weighted (bounded Bellman-Ford vs
-#             all-paths-cost CTE), ann_maxsim_topk (late-interaction
-#             MaxSim, unrolled 8x8x8 oracle).  Full driver-contract
-#             sweep re-run after the additions: 260 queries, 248
-#             hash-exact + 12 rows-only by design, 0 failures.
-#             Later r14 newcomers (same two-SF mirror discipline):
-#             curation_mix_schedule (stride-scheduler corpus mixing,
-#             extracted to operators.curation.stride_schedule +
-#             property-fuzzed vs a from-scratch reference),
-#             multimodal_gif_exact (from-scratch GIF-LZW codec, 200-id
-#             round-trip pinned), text_vocab_growth (Heaps-law curve,
-#             scale-adaptive checkpoints), ann_hard_negatives
-#             (filtered_topk negate mode, SQL-NULL inequality
-#             semantics pytest-pinned).  Bench: BENCH_DETAIL carries
-#             the r14 merge-min across official runs as the committed
-#             headline.)
+# The per-round rotation log is in git history.
 #
-# To rotate: swap the two tuples in _ROTATION and append a line to the log
-# above.  Rotate every round UNLESS a query in the out-half had a
+# To rotate: swap the two tuples in _ROTATION and say so in the commit
+# message.  Rotate every round UNLESS a query in the out-half had a
 # behavior-touching fix since its last driver row — then keep that half in
 # (or interleave) until it re-earns a driver-green row.
 _HALF_A = (
@@ -309,50 +99,15 @@ _HALF_B = (
     "linkage_q",
     "graph_q",
 )
-#   r14:      HALF_A first (CORRECTNESS_r14: 50/50 green, all hash-exact —
-#             sql/join/window families plus the 15 r14-newcomer pins below,
-#             every pin earned its first driver row and is dropped at r15
-#             open)
-#   r15:      HALF_B first (the r15 optimization round touches HALF_B
-#             operators — dedup, curation layout, graph loops, multimodal,
-#             streaming — so the LLM-pipeline half faces the driver;
-#             plan-affected queries are additionally re-pinned via
-#             _WINDOW_FIRST + _REPINNED as they change)
 _ROTATION = _HALF_B + _HALF_A
 
 # Queries awaiting their FIRST driver-green CORRECTNESS row, pinned to the
 # front of the registry so the driver's 50-row window is guaranteed to cover
-# them regardless of module sizes (HALF_B alone holds 65 queries — module
-# order can't fit all 23 r04 additions into 50 rows).  Maintain per round:
+# them regardless of module sizes (a half holds more than 50 queries, so
+# module order alone cannot).  Maintain per round:
 # once a name earns its driver row, drop it from this tuple; newly added
 # queries join it.
-_WINDOW_FIRST: tuple[str, ...] = (
-    # (r14 window: every r14 pin earned its row — CORRECTNESS_r14 came
-    #  back 50/50 green, ALL hash-exact, zero red rows — and all 15 were
-    #  dropped at r15 open.  r15 re-pins below: the optimization round
-    #  changed these queries' PLANS (outputs verified identical against
-    #  the full sf0.01 DuckDB sweep before commit), so each must re-earn
-    #  a driver-green row on the new plan.)
-    # r15 re-pin: grid_layout_audit job 2 rebuilt as one GROUPING SETS
-    # marginal aggregate (was: joint-grid collect) — same bit-exact
-    # integer output, different eager-job shape
-    "curation_zorder_layout",
-    # r15 re-pin: pagerank rounds now persist (3 consumers share one
-    # computation) with the lazy cut only every 6th round
-    "graph_pagerank",
-    # r15 re-pin: the symmetrized adjacency's eager cut became a
-    # persist — the query compiles once and rides one action
-    "graph_label_propagation",
-    # r15 re-pin: canonical edge list persisted; oriented's eager cut
-    # (its first consumer) materializes the cache in the same job
-    "graph_triangles",
-    # r15 re-pin: memory-sink copy-out is an eager localCheckpoint —
-    # rows stay in the JVM instead of a pickled-Row round trip
-    "streaming_ewma",
-    # r15 re-pin: _spread's already-wide check reads the scan's file
-    # count instead of compiling a throwaway physical plan per call
-    "multimodal_gif_exact",
-)
+_WINDOW_FIRST: tuple[str, ...] = ()
 
 #: Names RE-pinned after a behavior-touching change invalidated their old
 #: driver row: name -> round of the re-pin.  The window tripwire
@@ -360,14 +115,7 @@ _WINDOW_FIRST: tuple[str, ...] = (
 #: green in a committed correctness file; a re-pinned name is exempt until
 #: a committed green row from a round >= the re-pin round exists (the fix
 #: has then re-earned its row and the pin must be dropped as usual).
-_REPINNED: dict[str, int] = {
-    "curation_zorder_layout": 15,
-    "graph_pagerank": 15,
-    "graph_label_propagation": 15,
-    "graph_triangles": 15,
-    "streaming_ewma": 15,
-    "multimodal_gif_exact": 15,
-}
+_REPINNED: dict[str, int] = {}
 
 
 def _modules():

@@ -21,6 +21,7 @@ from ..operators.curation import (
     train_val_test_split,
     vocab_top_terms,
 )
+from ..session import cut
 from ..sources.readers import read_parquet_evolved, read_table
 
 _BUCKET = "((((doc_id * 2654435761) % 4294967296 + 4294967296) % 4294967296) % 100)"
@@ -1021,26 +1022,19 @@ def q_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonempty = normed.where(
         F.col("text_norm").isNotNull() & (F.col("text_norm") != "")
     )
-    base = quality_score(
-        nonempty, text_col="text_norm", keep=("text_norm",)
-    ).localCheckpoint(eager=True)
+    base = cut(quality_score(nonempty, text_col="text_norm", keep=("text_norm",)))
     quality = base.where("passes_quality").select("doc_id", "text_norm")
     # exact_dedup inlined on the flagged frame: min doc_id per md5 of
     # the normalized text — only 16-byte fingerprints + ids shuffle;
     # the winner-id set is checkpointed (tiny), not the text.
-    winners = (
+    winners = cut(
         quality.groupBy(F.md5("text_norm").alias("_fp"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint(eager=True)
     )
     exact = quality.join(winners, "doc_id", "semi")
     pairs = minhash_near_dup_pairs(exact, text_col="text_norm", threshold=0.6)
-    losers = (
-        pairs.select(F.col("id_b").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    losers = cut(pairs.select(F.col("id_b").alias("doc_id")).distinct())
     kept = exact.join(losers, "doc_id", "anti")
     b = hash_bucket("doc_id")
     split = kept.select(
@@ -1419,9 +1413,9 @@ def q_curation_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang_bucket")
         )
         # materialize before the snapshot dir is removed — the result is
-        # |langs|+1 rows, metadata-sized by construction; the checkpoint
+        # |langs|+1 rows, metadata-sized by construction; a local cut
         # stays in the JVM and session.release_pins frees it
-        return out.localCheckpoint(eager=True)
+        return cut(out)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

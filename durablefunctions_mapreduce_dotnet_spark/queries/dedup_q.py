@@ -19,6 +19,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_candidates,
 )
+from ..session import cut
 from ..sources.readers import read_table
 
 
@@ -214,13 +215,18 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+# The exact-pair oracles below MATERIALIZE ``pairs``: inlined, DuckDB
+# re-runs the quadratic all-pairs Jaccard join once per reference (both
+# legs of ``edges``); _DEDUP_CLUSTERS_SQL at sf0.001 on a 4-core host
+# took 247 s inlined and 68 s materialized.  The hint changes execution
+# only; the rows are identical.
 _DEDUP_CLUSTERS_SQL = """
 WITH RECURSIVE sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(length(lower(text)) - 8, 1) + 1),
                                       i -> substr(lower(text), i, 9))) AS s
   FROM documents
-), pairs AS (
+), pairs AS MATERIALIZED (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
@@ -289,11 +295,7 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_near_dup_incremental,
         shingle_minhash_table_fast,
     )
-    from ..operators.graph import (
-        canonicalize_clusters,
-        incremental_components,
-        local_checkpoint,
-    )
+    from ..operators.graph import canonicalize_clusters, incremental_components
 
     d = read_table(spark, sf_dir, "documents")
     hist = d.where(F.col("doc_id") % 2 == 0)
@@ -305,7 +307,7 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # history banding + hashes) read the materialized table instead of
     # re-running the corpus-sized Arrow kernel (eager: the consumer
     # stages race within one job, so a lazy pin would double-compute).
-    hist_tbl = local_checkpoint(
+    hist_tbl = cut(
         shingle_minhash_table_fast(hist, "text", "doc_id", 9, 63, bands=21)
     )
     hist_pairs = minhash_near_dup_pairs(hist, threshold=0.6, table=hist_tbl).select(
@@ -367,7 +369,7 @@ WITH RECURSIVE sh AS (
          list_distinct(list_transform(range(1, greatest(length(lower(text)) - 8, 1) + 1),
                                       i -> substr(lower(text), i, 9))) AS s
   FROM documents
-), pairs AS (
+), pairs AS MATERIALIZED (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
@@ -587,7 +589,7 @@ WITH RECURSIVE sh AS (
          list_distinct(list_transform(range(1, greatest(length(lower(text)) - 8, 1) + 1),
                                       i -> substr(lower(text), i, 9))) AS s
   FROM documents
-), pairs AS (
+), pairs AS MATERIALIZED (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)

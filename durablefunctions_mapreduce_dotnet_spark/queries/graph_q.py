@@ -28,17 +28,15 @@ _DAMPING = 0.85
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import local_checkpoint
-
     li = read_table(spark, sf_dir, "lineitem")
     edges = li.select(
         F.col("l_suppkey").cast("long").alias("src"),
         (F.col("l_partkey") + 1_000_000).alias("dst"),
     )
-    # lineage cut per iteration: without it the lazily-unrolled plan
-    # re-reads the edge scan 2^iters times (measured 5.6 s -> ~2 s at
-    # sf0.1); values are identical — the cut changes execution, not math
-    return pagerank(edges, iters=_ITERS, damping=_DAMPING, checkpoint=local_checkpoint)
+    # no lineage cut runs: at _ITERS = 3 no round reaches the
+    # operator's every-6th-round cut, and each round's ranks is
+    # persisted instead, so its three consumers share one computation
+    return pagerank(edges, iters=_ITERS, damping=_DAMPING)
 
 
 def _pagerank_oracle_sql(iters: int = _ITERS, damping: float = _DAMPING) -> str:
@@ -356,7 +354,7 @@ def q_graph_bfs_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the closure with a recursive CTE + MIN(dist), which
     must equal first-visit depth — locking the level-order invariant
     the anti-join relies on."""
-    from ..operators.graph import landmark_bfs, local_checkpoint
+    from ..operators.graph import landmark_bfs
 
     li = read_table(spark, sf_dir, "lineitem")
     edges = li.select(
@@ -364,7 +362,7 @@ def q_graph_bfs_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") + 1_000_000).alias("dst"),
     )
     lms = spark.createDataFrame([(1,), (2,), (3,), (4,)], "lm bigint")
-    d = landmark_bfs(edges, lms, max_depth=4, checkpoint=local_checkpoint)
+    d = landmark_bfs(edges, lms, max_depth=4)
     return (
         d.groupBy("lm", "dist")
         .agg(
@@ -411,7 +409,7 @@ def q_graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     which must equal the relaxation fixpoint at round 4 — locking that
     a longer-hop-but-cheaper path is NOT missed (the property
     first-visit BFS pruning would break)."""
-    from ..operators.graph import local_checkpoint, sssp_bounded
+    from ..operators.graph import sssp_bounded
 
     li = read_table(spark, sf_dir, "lineitem")
     edges = li.select(
@@ -419,7 +417,7 @@ def q_graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") + 1_000_000).alias("dst"),
         ((F.col("l_quantity").cast("long") % 3) + 1).alias("w"),
     )
-    d = sssp_bounded(edges, source=1, rounds=4, checkpoint=local_checkpoint)
+    d = sssp_bounded(edges, source=1, rounds=4)
     return d.orderBy("cost", "node").limit(50)
 
 

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import brute_force_topk, ivf_topk, lsh_topk, maxsim_topk
+from ..session import cut
 from ..sources.readers import read_table
 
 
@@ -1365,18 +1366,22 @@ def q_ann_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     chunks = chunk_documents_tokens(d, chunk_tokens=64, overlap_tokens=8)
     fp = F.md5(F.trim(F.regexp_replace(F.lower("chunk_text"), r"\s+", " ")))
-    ch = chunks.select(
-        "doc_id",
-        (F.col("doc_id") * 10_000 + F.col("chunk_idx")).alias("chunk_id"),
-        fp.alias("_fp"),
-    ).localCheckpoint(eager=True)
+    ch = cut(
+        chunks.select(
+            "doc_id",
+            (F.col("doc_id") * 10_000 + F.col("chunk_idx")).alias("chunk_id"),
+            fp.alias("_fp"),
+        )
+    )
     winners = ch.groupBy("_fp").agg(F.min("chunk_id").alias("chunk_id"))
     uniq = ch.join(winners.select("chunk_id"), "chunk_id", "semi")
-    corpus = e.join(
-        uniq.select(F.col("doc_id").alias("vec_id")).distinct(), "vec_id", "semi"
-    ).localCheckpoint(eager=True)
+    corpus = cut(
+        e.join(
+            uniq.select(F.col("doc_id").alias("vec_id")).distinct(), "vec_id", "semi"
+        )
+    )
     queries = corpus.where(F.col("vec_id") % 50 == 0)
-    retrieved = filtered_topk(corpus, queries, k=20).localCheckpoint(eager=True)
+    retrieved = cut(filtered_topk(corpus, queries, k=20))
     picks = mmr_rerank(corpus, queries, k=5, lam=0.5, candidates=retrieved)
 
     def cnt(df: DataFrame, stage: str) -> DataFrame:
@@ -1409,7 +1414,13 @@ def _rag_pipeline_sql(k: int = 5, n_cand: int = 20, lam: float = 0.5) -> str:
     curation_chunk_tokens CTE at 64/8) → fingerprint dedup → corpus →
     label-filtered top-n_cand rel → the same unrolled greedy MMR as
     _mmr_oracle_sql (rel/sim redefined over the filtered candidates)
-    → stage counts + the integer pick checksum."""
+    → stage counts + the integer pick checksum.
+
+    The re-read CTEs (chunks, corpus, rel, sim and the pc{t} pick
+    chain) are ``MATERIALIZED``: inlined, each pc{t} re-derives rel and
+    sim per reference, and the query ran out of memory at 12.5 GiB;
+    materialized, it runs in about 0.3 s at sf0.001 with the same
+    rows."""
     from .curation_q import _BPE_RE_SQL
 
     parts = [
@@ -1421,7 +1432,7 @@ WITH tk AS (
         FROM documents)
   WHERE len(toks) > 0
 ),
-chunks AS (
+chunks AS MATERIALIZED (
   SELECT doc_id, doc_id * 10000 + i AS chunk_id,
          md5(trim(regexp_replace(lower(array_to_string(
            list_slice(toks, CAST(i * 56 + 1 AS BIGINT),
@@ -1433,14 +1444,14 @@ uniq AS (
   SELECT doc_id, chunk_id FROM chunks
   WHERE chunk_id IN (SELECT MIN(chunk_id) FROM chunks GROUP BY fp)
 ),
-corpus AS (
+corpus AS MATERIALIZED (
   SELECT vec_id, label, embedding::DOUBLE[] AS v,
          sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
   FROM embeddings WHERE vec_id IN (SELECT DISTINCT doc_id FROM uniq)
 ),
 q AS (SELECT vec_id AS qid, label AS ql, v AS qv, nrm AS qn
       FROM corpus WHERE vec_id % 50 = 0),
-rel AS (
+rel AS MATERIALIZED (
   SELECT qid, vid, r FROM (
     SELECT q.qid, c.vec_id AS vid,
            list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i]))
@@ -1448,7 +1459,7 @@ rel AS (
     FROM q JOIN corpus c ON q.qid != c.vec_id AND q.ql = c.label
   ) QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY r DESC, vid) <= {n_cand}
 ),
-sim AS (
+sim AS MATERIALIZED (
   SELECT ra.qid, ra.vid AS va, rb.vid AS vb,
          list_sum(list_transform(range(1, len(ea.v) + 1), i -> ea.v[i] * eb.v[i]))
            / (ea.nrm * eb.nrm) AS s
@@ -1460,7 +1471,7 @@ p1 AS (
   SELECT qid, vid FROM rel
   QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY r DESC, vid) = 1
 ),
-pc1 AS (SELECT qid, vid, 1 AS rank FROM p1)"""
+pc1 AS MATERIALIZED (SELECT qid, vid, 1 AS rank FROM p1)"""
     ]
     for t in range(2, k + 1):
         parts.append(f""",
@@ -1477,7 +1488,7 @@ p{t} AS (
   SELECT qid, vid FROM sc{t}
   QUALIFY ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, vid) = 1
 ),
-pc{t} AS (
+pc{t} AS MATERIALIZED (
   SELECT * FROM pc{t - 1}
   UNION ALL SELECT qid, vid, {t} AS rank FROM p{t}
 )""")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs that every query path should assert, even on a
 # SparkSession we did not build (the driver harness passes us one).
@@ -72,8 +72,28 @@ def release_pins(spark: SparkSession) -> None:
     nothing), then unpersist any RDD still left, such as local checkpoints.
 
     Consume every returned frame first: a persisted frame recomputes after
-    release, but one riding a local checkpoint (``run_to_memory``, BPE
-    merge rounds, connected-component cuts) cannot, and reading it raises."""
+    release, but one riding a local cut (``run_to_memory``, BPE merge
+    rounds, connected-component cuts; see :func:`cut`) cannot, and reading
+    it raises.  Reliable cuts live in checkpoint files, not in the block
+    store, and stay readable."""
     spark.catalog.clearCache()
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()
+
+
+def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage; the one place that knows how.
+
+    With a checkpoint dir on the context (Spark's ``spark.checkpoint.dir``
+    conf, or ``sparkContext.setCheckpointDir``) this is a reliable
+    ``df.checkpoint``: the rows are written to that dir and survive
+    executor loss, the cluster setting.  Without one it is a
+    ``df.localCheckpoint``: blocks pinned in executor storage, fast but
+    lost with their executor, and freed by :func:`release_pins`.
+
+    ``eager=False`` only marks the cut, and the next action on the frame
+    materializes it; callers whose next step is a probe aggregation use
+    it to pay one pass per round instead of two."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager)
+    return df.checkpoint(eager)

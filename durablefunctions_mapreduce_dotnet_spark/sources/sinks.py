@@ -143,8 +143,8 @@ class StagedPipeline:
     with ``mode=overwrite``, clobbering the partial output.
 
     Returned frames are the read-back parquet, so downstream stages cut
-    lineage at every stage boundary for free (the iterative-loop
-    discipline of ``graph.reliable_checkpoint``, here across runs).  At
+    lineage at every stage boundary for free (what a reliable
+    ``session.cut`` does inside one run, here across runs).  At
     100 TB the marker check is one metadata call per stage and the cost
     is one extra write+read of each stage's output — the explicit price
     of restartability, paid only at stage boundaries the caller picks.

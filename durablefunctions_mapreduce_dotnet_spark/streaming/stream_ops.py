@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+from ..session import cut
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +89,7 @@ def run_to_memory(
     # materialized copy per run.  Streaming aggregates are driver-small
     # by the state-sizing contracts documented on each query.
     #
-    # r15: the copy is an EAGER localCheckpoint — rows stay in the JVM
+    # r15: the copy is an EAGER ``session.cut`` — rows stay in the JVM
     # (evictable storage blocks, independent of the dropped view).  The
     # old ``createDataFrame(tbl.collect(), schema)`` paid a full
     # JVM → Python(pickled Rows) → JVM round trip per drain
@@ -96,9 +97,9 @@ def run_to_memory(
     # streaming_ewma (150 rows!): 1.92 → 1.52 s min-of-4 interleaved,
     # outputs asserted identical — the boundary was pure overhead
     # (guide §4: eliminate the Python boundary; §6: no row-path driver
-    # transfers).  The checkpoint cannot be recomputed once released:
+    # transfers).  A local cut cannot be recomputed once released:
     # consume ``out`` fully before any ``session.release_pins``.
-    out = tbl.localCheckpoint(eager=True)
+    out = cut(tbl)
     spark.catalog.dropTempView(name)
     return out
 
@@ -527,7 +528,8 @@ def run_to_files_idempotent(
     calls — correct wherever the driver sees the target path as a
     filesystem (local, NFS, FUSE-mounted object store).  For raw
     s3a/abfss targets swap the marker I/O for the Hadoop FS API (the
-    ``reliable_checkpoint`` pattern); the ledger LOGIC is unchanged."""
+    way Spark writes its own checkpoint files); the ledger LOGIC is
+    unchanged."""
     import os
 
     from ..sources.sinks import merge_upsert_partitioned

@@ -19,3 +19,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
     yield s
+
+
+@pytest.fixture(scope="session")
+def reliable_cuts(tmp_path_factory):
+    """One fresh-JVM run of the lineage-cut operators under local and
+    reliable cuts, shared by the tests of the reliable path."""
+    from .test_cut import run_reliable_cuts
+
+    return run_reliable_cuts(str(tmp_path_factory.mktemp("ckpt")))

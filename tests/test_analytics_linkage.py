@@ -315,13 +315,10 @@ def test_pagerank_mass_conservation_and_hand_graph(spark):
     """Total rank mass stays 1 every iteration (dangling redistribution
     included), and a 3-node hand graph gets the analytically-known
     ordering: a node fed by everything outranks its feeders.  Deep
-    iteration counts REQUIRE the checkpoint hook — each un-cut round
-    doubles the self-referencing plan (the operator docstring's
-    contract), so this also exercises the convergence-loop path."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        local_checkpoint,
-        pagerank,
-    )
+    iteration counts REQUIRE the every-6th-round lineage cut — each
+    un-cut round doubles the self-referencing plan (the operator
+    docstring's contract), so this also exercises the cut path."""
+    from durablefunctions_mapreduce_dotnet_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 3), (2, 3), (3, 1)], "src long, dst long"
@@ -332,7 +329,7 @@ def test_pagerank_mass_conservation_and_hand_graph(spark):
     # ordering assertion is meaningful
     out = {
         r.node: r.rank
-        for r in pagerank(edges, iters=30, checkpoint=local_checkpoint).collect()
+        for r in pagerank(edges, iters=30).collect()
     }
     assert abs(sum(out.values()) - 1.0) < 1e-6
     # node 2 has no in-links: rank is exactly the teleport term
@@ -343,7 +340,7 @@ def test_pagerank_mass_conservation_and_hand_graph(spark):
     bip = spark.createDataFrame([(1, 10), (2, 10), (2, 11)], "src long, dst long")
     out2 = {
         r.node: r.rank
-        for r in pagerank(bip, iters=4, checkpoint=local_checkpoint).collect()
+        for r in pagerank(bip, iters=4).collect()
     }
     assert abs(sum(out2.values()) - 1.0) < 1e-6
     assert out2[10] > out2[11]
@@ -548,32 +545,6 @@ def test_asof_forward_skew_width_matches_ts_units(spark, monkeypatch):
         lt, rt, key="k", payload={"v": "v"}, skew_keys=[7], skew_bucket_seconds=50.0
     ).collect()
     assert captured["w"] == 50.0 * 1_000_000.0
-
-
-def test_connected_components_opaque_checkpoint_fn_still_works(spark):
-    """Custom checkpoint fns without the optional .lazy sibling get the
-    eager fallback — the pluggable contract is unchanged."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        connected_components,
-    )
-
-    calls = {"n": 0}
-
-    def counting_eager(df):
-        calls["n"] += 1
-        return df.localCheckpoint(eager=True)
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    comp = {
-        (r.n, r.component)
-        for r in connected_components(
-            pairs, checkpoint=counting_eager, small_graph_threshold=0
-        ).collect()
-    }
-    assert comp == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    assert calls["n"] >= 3  # edges + labels + >=1 iteration
 
 
 def test_asof_tolerance_matches_pandas(spark):

@@ -394,36 +394,14 @@ def test_simhash_candidates_recall_is_exact_vs_bruteforce(spark):
     assert got == want
 
 
-def test_minhash_checkpoint_fn_is_pluggable(spark, tmp_path):
-    """shingle_hash_table / minhash_near_dup_pairs accept the same
-    lineage-cut hook as connected_components: a reliable checkpoint (the
-    100 TB setting) must produce the identical pair set as the default
-    localCheckpoint."""
-    from durablefunctions_mapreduce_dotnet_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-    )
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        reliable_checkpoint,
-    )
-
-    d = read_table(spark, SF_DIR, "documents")
-    base = sorted(
-        tuple(r) for r in minhash_near_dup_pairs(d, threshold=0.6)
-        .select("id_a", "id_b").collect()
-    )
-    calls = []
-
-    def counting_reliable(df):
-        calls.append(1)
-        return reliable_checkpoint(str(tmp_path / "ckpt"))(df)
-
-    got = sorted(
-        tuple(r) for r in minhash_near_dup_pairs(
-            d, threshold=0.6, checkpoint=counting_reliable
-        ).select("id_a", "id_b").collect()
-    )
-    assert got == base and len(base) > 0
-    assert len(calls) >= 2  # shared shingle pass + candidate pin both rode the hook
+def test_minhash_checkpoint_fn_is_pluggable(reliable_cuts):
+    """minhash_near_dup_pairs cuts through ``session.cut`` like
+    connected_components, so the cut is chosen by the context: under a
+    checkpoint dir (the 100 TB setting) its reliable checkpoints must
+    produce the identical pair set as the default localCheckpoint."""
+    base = reliable_cuts["local"]["minhash"]
+    assert base and reliable_cuts["reliable"]["minhash"] == base
+    assert reliable_cuts["files"]["minhash"] > 0  # its cuts wrote to the dir
 
 
 def test_minhash_precomputed_table_paths_identical(spark):
@@ -439,15 +417,13 @@ def test_minhash_precomputed_table_paths_identical(spark):
         minhash_near_dup_pairs,
         shingle_minhash_table_fast,
     )
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        local_checkpoint,
-    )
+    from durablefunctions_mapreduce_dotnet_spark.session import cut
     from pyspark.sql import functions as F
 
     d = read_table(spark, SF_DIR, "documents")
     hist = d.where(F.col("doc_id") % 2 == 0)
     new = d.where(F.col("doc_id") % 2 == 1)
-    tbl = local_checkpoint(
+    tbl = cut(
         shingle_minhash_table_fast(hist, "text", "doc_id", 9, 63, bands=21)
     )
 

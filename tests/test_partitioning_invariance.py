@@ -76,17 +76,14 @@ def test_lm_score_and_entropy_partitioning_invariant(spark):
 
 
 def test_pagerank_partitioning_invariant(spark):
-    from durablefunctions_mapreduce_dotnet_spark.operators.graph import (
-        local_checkpoint,
-        pagerank,
-    )
+    from durablefunctions_mapreduce_dotnet_spark.operators.graph import pagerank
 
     base = spark.createDataFrame(
         [((i * 31) % 50, (i * 17) % 50) for i in range(1500)], "src long, dst long"
     )
     a, b = _both_layouts(base)
-    ra = _rows(pagerank(a, iters=3, checkpoint=local_checkpoint), "node", "rank")
-    rb = _rows(pagerank(b, iters=3, checkpoint=local_checkpoint), "node", "rank")
+    ra = _rows(pagerank(a, iters=3), "node", "rank")
+    rb = _rows(pagerank(b, iters=3), "node", "rank")
     assert ra == rb
 
 
